@@ -37,11 +37,18 @@ object Skew {
   /** Size-aware rebalance for per-row heavy stages: partition by
     * hash(size-magnitude, row discriminator) so giant rows scatter across
     * partitions instead of clustering by input order. No global sort — this
-    * stays a single shuffle and survives any scale. */
+    * stays a single shuffle and survives any scale.
+    *
+    * The two columns go to `repartition` as they are: hash partitioning
+    * already takes `pmod(hash(cols), n)`. A key pre-wrapped in
+    * `pmod(hash(...), n)` has only n distinct values, which the exchange
+    * hashes a second time — n values thrown into n buckets leave about 1/e
+    * of the buckets empty (two of four at n = 4, one of two at n = 2, 14
+    * of 32 at n = 32), so those tasks idle while the rest carry the whole
+    * batch. */
   def rebalanceBySize(df: DataFrame, sizeExpr: Column, discriminator: Column,
       partitions: Int): DataFrame =
-    df.repartition(partitions,
-      pmod(hash(ceil(log2(greatest(sizeExpr, lit(1)))), discriminator), lit(partitions)))
+    df.repartition(partitions, ceil(log2(greatest(sizeExpr, lit(1)))), discriminator)
 
   /** Key-skew DIAGNOSIS — the report run BEFORE deciding whether a join or
     * groupBy needs the levers above (salting, AQE hints, a hot-key cap).

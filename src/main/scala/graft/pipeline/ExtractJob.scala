@@ -16,10 +16,12 @@ import org.apache.spark.sql.functions._
   * forms that are asserted equal in tests:
   *
   *  - [[runTyped]]: per-partition typed pipeline. The whole computation is
-  *    per-document, so this is a ZERO-SHUFFLE narrow map — the shape that
-  *    scales linearly to 10^12 documents: no exchange, no skew-sensitive
-  *    join; giant docs only skew individual tasks, which AQE-sized input
-  *    splits and the size-bucketed repartition in [[runJob]] absorb.
+  *    per-document, so the kernel itself is a narrow map — the shape that
+  *    scales linearly to 10^12 documents: no skew-sensitive join, no
+  *    exchange inside the kernel. Giant docs only skew individual tasks;
+  *    [[runJob]] spreads them with one hash exchange per commit batch
+  *    (`Skew.rebalanceBySize`) in front of the kernel, which then writes
+  *    from the same stage.
   *
   *  - [[runExploded]]: fully declarative Catalyst plan (posexplode → window
   *    page-fill → predicate filters → gaps-and-islands → range join →
@@ -202,10 +204,16 @@ object ExtractJob {
     * write with dynamic partition overwrite, append lineage rows. Partitions
     * are committed in batches of `commitBatch` so a killed run loses at most
     * one uncommitted batch and the rerun picks up exactly the pending ones.
+    *
+    * Each batch is one hash exchange (the size rebalance) feeding one stage
+    * that runs the kernel and writes. The lineage counts are read back from
+    * the batch's committed partition directories — one leaf column, cheap
+    * next to the kernel — so they report what was committed, and the
+    * kernel's output is never cached: under AQE a cache is a stage of its
+    * own, which would run the kernel into memory and write in a second job.
     */
   def runJob(spark: SparkSession, inputPath: String, outputPath: String,
       lineagePath: String, cfg: Ep1Config = Ep1Config(), commitBatch: Int = 8): Seq[LineageRow] = {
-    import spark.implicits._
     val input = spark.read.parquet(inputPath)
     val pending = TableIO.pendingPartitions(input, lineagePath)
     val all = scala.collection.mutable.ArrayBuffer.empty[LineageRow]
@@ -220,17 +228,17 @@ object ExtractJob {
         size(col("spans")), col("doc_id"), shufflePartitions)
       // row-based path: the job reads parquet, so the Doc-encoder
       // round-trip would be pure overhead here (see runRows scaladoc)
-      val outDf = runRows(docs, cfg).cache()
-      TableIO.writePartitioned(outDf, outputPath)
-      val stats = outDf.groupBy("partition_id")
-        .agg(count(lit(1)).as("docs"), sum(size(col("spans"))).as("spans"))
+      TableIO.writePartitioned(runRows(docs, cfg), outputPath)
+      val stats = spark.read.option("basePath", outputPath)
+        .parquet(batch.map(p => s"$outputPath/partition_id=$p"): _*)
+        .groupBy(col("partition_id").cast("int").as("partition_id"))
+        .agg(count(lit(1)).as("docs"), sum(size(col("spans.offset"))).as("spans"))
         .collect()
       val wallMs = (System.nanoTime() - t0) / 1000000
       val rows = stats.map(r => LineageRow(
         r.getAs[Int]("partition_id"), r.getAs[Long]("docs"),
         r.getAs[Long]("docs"), r.getAs[Long]("spans"), wallMs)).toSeq
       TableIO.appendLineage(spark, rows, lineagePath)
-      outDf.unpersist()
       all ++= rows
     }
     all.toSeq

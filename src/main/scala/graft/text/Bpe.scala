@@ -20,9 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   * encodings — wrapping makes adjacent matches share no characters, so
   * sequential non-overlapping replace is exactly the same greedy pass.
   *
-  * Ties in the argmax break on (pair count desc, left asc, right asc) — a
-  * total order, so training is deterministic and engine-replayable. All
-  * counts are int64.
+  * Ties in the argmax break on (pair count desc, left asc, right asc),
+  * strings in UTF-8 byte order — a total order, so training is
+  * deterministic and engine-replayable. All counts are int64.
   */
 object Bpe {
 
@@ -38,6 +38,24 @@ object Bpe {
       } else { out += syms(i); i += 1 }
     }
     out.result()
+  }
+
+  /** Spark's string order — UTF-8 bytes, which is code-point order — so
+    * driver-side tie-breaks match `orderBy` on string columns. JVM
+    * `String.compareTo` compares UTF-16 units instead, which puts
+    * supplementary-plane symbols (surrogates, U+D800–U+DFFF) before
+    * U+E000–U+FFFF. */
+  private[text] object Utf8Order extends Ordering[String] {
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n) {
+        val ca = a.codePointAt(i); val cb = b.codePointAt(i)
+        if (ca != cb) return Integer.compare(ca, cb)
+        i += Character.charCount(ca)
+      }
+      Integer.compare(a.length, b.length)
+    }
   }
 
   private val VocabSchema = StructType(Seq(
@@ -60,10 +78,14 @@ object Bpe {
     * bounded relation, not a corpus iteration). Stops early if no pair is
     * left. */
   def trainMerges(df: DataFrame, textCol: String, k: Int)
+      : (Seq[Merge], DataFrame) = trainMergesOnVocab(vocab(df, textCol), k)
+
+  /** [[trainMerges]] from an already-built (word, cnt, syms) vocab. */
+  private[text] def trainMergesOnVocab(v: DataFrame, k: Int)
       : (Seq[Merge], DataFrame) = {
     require(k >= 1, s"k must be >= 1: $k")
     val merges = Seq.newBuilder[Merge]
-    var state = graft.io.Persisted.track(vocab(df, textCol)
+    var state = graft.io.Persisted.track(v
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     var prev: DataFrame = null
     var round = 1
@@ -236,24 +258,27 @@ object Bpe {
     * A vocab above the bound refuses loudly; the caller falls back to
     * [[trainMergesBatched]], which never collects the vocab. */
   def trainMergesLocal(df: DataFrame, textCol: String, k: Int,
-      maxVocab: Int = 20000000): (Seq[Merge], DataFrame) = {
+      maxVocab: Int = 20000000): (Seq[Merge], DataFrame) =
+    trainMergesLocalOnVocab(vocab(df, textCol), k, maxVocab)
+
+  /** [[trainMergesLocal]] from an already-built (word, cnt, syms) vocab. */
+  private[text] def trainMergesLocalOnVocab(v: DataFrame, k: Int,
+      maxVocab: Int): (Seq[Merge], DataFrame) = {
     require(k >= 1, s"k must be >= 1: $k")
-    val spark = df.sparkSession
-    val rows = vocab(df, textCol).limit(maxVocab + 1).collect()
+    val spark = v.sparkSession
+    val rows = v.limit(maxVocab + 1).collect()
     require(rows.length <= maxVocab,
       s"vocab exceeds maxVocab=$maxVocab — use trainMergesBatched")
     val syms = rows.map(_.getSeq[String](2).toVector)
     val cnts = rows.map(_.getLong(1))
 
-    // pair -> current weighted count, membership, and a (−cnt, lhs, rhs)
-    // ordered selection tree mirroring the distributed argmax exactly
+    // pair -> current weighted count, membership, and a (cnt desc, lhs,
+    // rhs) ordered selection tree mirroring the distributed argmax exactly
     val count = scala.collection.mutable.HashMap.empty[(String, String), Long]
     val members = scala.collection.mutable.HashMap
       .empty[(String, String), scala.collection.mutable.HashSet[Int]]
     val selOrd: Ordering[(Long, String, String)] =
-      Ordering.by[(Long, String, String), (Long, String, String)] {
-        case (c, l, r) => (-c, l, r)
-      }
+      Ordering.Tuple3(Ordering.Long.reverse, Utf8Order, Utf8Order)
     val tree = scala.collection.mutable.TreeSet.empty[(Long, String, String)](selOrd)
 
     def adjacentPairs(v: Vector[String]): Seq[(String, String)] =

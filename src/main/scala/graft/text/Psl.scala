@@ -10,7 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * executor loads it once per JVM from its own classpath — the same
   * distribution property a broadcast gives, without a per-plan
   * broadcast of a static artifact; swapping in the complete upstream
-  * list is a resource-file replacement only.
+  * list is a resource-file replacement, with one condition: its rules
+  * must be in punycode (`xn--`) form. The upstream file spells IDN rules
+  * in Unicode, while `Web.host` only lowercases hosts (their IDN labels
+  * are normally punycode on the wire), so a Unicode rule would
+  * silently never match — convert those rules with `java.net.IDN.toASCII`
+  * before bundling the file.
   *
   * Matching (publicsuffix.org/list semantics):
   *  1. the longest EXCEPTION rule whose labels tail-match the host wins
@@ -50,7 +55,7 @@ object Psl {
           if (depth > maxDepth) maxDepth = depth
         } else {
           normal += line
-          if (depth + 1 > maxDepth) maxDepth = depth + 1 // wildcards add one
+          if (depth > maxDepth) maxDepth = depth
         }
       }
     }

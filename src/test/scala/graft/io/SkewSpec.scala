@@ -34,6 +34,19 @@ class SkewSpec extends SparkTestBase {
     assert(rebalanced.count() == 800)
   }
 
+  test("size rebalance fills every partition evenly at any partition count") {
+    // a key pre-wrapped in pmod(hash, n) is hashed again by the exchange:
+    // n distinct keys into n buckets leaves partitions empty (2 of 4 at n = 4)
+    val df = spark.range(20000).select(col("id"), lit(100).as("sz"))
+    for (n <- Seq(2, 4, 8, 32)) {
+      val rows = Skew.rebalanceBySize(df, col("sz"), col("id"), n)
+        .queryExecution.toRdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(rows.length == n && rows.sum == 20000)
+      assert(rows.min > 0, s"n = $n: empty partitions in ${rows.toSeq}")
+      assert(rows.max <= 1.3 * rows.min, s"n = $n: uneven spread ${rows.toSeq}")
+    }
+  }
+
   private def runSkew(keys: Seq[String]) =
     Skew.keySkew(keys.map(k => (k, 1)).toDF("k", "v"), Seq("k"))
       .as[(Long, Long, Long, Long, Long, Long, String)].collect().head

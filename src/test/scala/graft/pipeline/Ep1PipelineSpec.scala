@@ -153,6 +153,36 @@ class Ep1PipelineSpec extends SparkTestBase {
     for (d <- rtDocs) assert(d.spans == typed(d.doc_id), s"doc ${d.doc_id} diverged (parquet)")
   }
 
+  // ------------------------------------------------ plan invariance -------
+  test("runJob output and lineage do not depend on spark.sql.shuffle.partitions") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_plan").toString
+    val in = s"$dir/in"
+    Synth.generate(spark, 96, nPartitions = 6).toDF()
+      .write.partitionBy("partition_id").parquet(in)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val runs = try Seq(1, 2, 7).map { n =>
+      spark.conf.set(key, n.toString)
+      val (out, lin) = (s"$dir/out$n", s"$dir/lineage$n")
+      ExtractJob.runJob(spark, in, out, lin, commitBatch = 4)
+      val lineage = TableIO.readLineage(spark, lin).collect()
+        .map(r => (r.partition_id, r.docs_in, r.docs_out, r.spans_out)).sortBy(_._1).toSeq
+      val committed = spark.read.parquet(out).as[Doc].collect()
+      // each lineage row counts exactly what its partition committed
+      val spansByPart = committed.groupMapReduce(_.partition_id)(_.spans.size.toLong)(_ + _)
+      assert(lineage.map(_._1) == (0 until 6))
+      for ((p, _, _, spansOut) <- lineage)
+        assert(spansByPart.get(p).contains(spansOut), s"n = $n, partition $p")
+      (committed.map(d => d.doc_id -> d.spans).toMap, lineage)
+    } finally spark.conf.set(key, saved)
+    assert(runs.head._1.size == 96)
+    for ((docs, lineage) <- runs.tail) {
+      assert(docs == runs.head._1, "output depends on the shuffle partition count")
+      assert(lineage == runs.head._2, "lineage depends on the shuffle partition count")
+    }
+  }
+
   // --------------------------------------------- lineage + resume (J7) -----
   test("runJob commits lineage per partition and resumes idempotently") {
     import spark.implicits._

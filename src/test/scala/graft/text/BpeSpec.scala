@@ -114,6 +114,28 @@ class BpeSpec extends SparkTestBase {
     }
   }
 
+  test("local trainer breaks ties in UTF-8 order past the BMP, like the argmax") {
+    // U+1D538 is a surrogate pair in UTF-16, so as a JVM String it sorts
+    // BEFORE U+E000; in UTF-8 bytes (Spark's string order) it sorts after
+    val sup = "\uD835\uDD38"; val pua = "\uE000"
+    assert(sup.compareTo(pua) < 0 && Bpe.Utf8Order.compare(sup, pua) > 0)
+    // four pairs, all at count 10: every round is a pure tie-break
+    val v = Seq((sup + "x", Seq(sup, "x")), (pua + "x", Seq(pua, "x")),
+      ("x" + sup, Seq("x", sup)), ("x" + pua, Seq("x", pua)))
+      .map { case (w, syms) => (w, 10L, syms) }.toDF("word", "cnt", "syms")
+    val (seq, vSeq) = Bpe.trainMergesOnVocab(v, 4)
+    val segSeq = vSeq.orderBy("word")
+      .select("word", "cnt", "syms").as[(String, Long, Seq[String])].collect()
+    graft.io.Persisted.release(spark)
+    assert(seq.map(m => (m.lhs, m.rhs)) ==
+      Seq(("x", pua), ("x", sup), (pua, "x"), (sup, "x")))
+    val (loc, vL) = Bpe.trainMergesLocalOnVocab(v, 4, maxVocab = 100)
+    val segL = vL.orderBy("word")
+      .select("word", "cnt", "syms").as[(String, Long, Seq[String])].collect()
+    assert(loc == seq, s"rules diverged: local=$loc sequential=$seq")
+    assert(segL.toSeq == segSeq.toSeq, "segmented vocab diverged")
+  }
+
   test("batched trainer ≡ sequential on adversarial tie/merged-token corpora") {
     // ties at the conflict bound + a pair whose symbols reappear inside a
     // merged token ((a,b) then (c,ab)-shaped interactions)

@@ -15,7 +15,9 @@ class PslSpec extends SparkTestBase {
     assert(r.normal.contains("whitespace.example"))
     assert(r.wildcard == Set("ck", "kawasaki.jp"))
     assert(r.exception == Set("www.ck", "city.kawasaki.jp"))
-    assert(r.maxDepth >= 3)
+    // the deepest rule has 3 labels; a normal rule needs no headroom
+    assert(r.maxDepth == 3)
+    assert(Psl.parse(Iterator("com", "co.uk")).maxDepth == 2)
   }
 
   test("publicsuffix.org algorithm: normal, wildcard, exception, default, depth-3") {
